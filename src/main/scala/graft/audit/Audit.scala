@@ -26,18 +26,31 @@ object Audit {
             now: Timestamp): IngestionLog =
     IngestionLog(runId, source, table, 0L, 0L, 0L, "running", now, None, None, None)
 
+  /** Close a run as success (or partial, when rows failed). `now` is the
+    * run's logical time and stamps `endTime`, like `startTime`, so the
+    * row stays deterministic; `elapsedSeconds` is the run's real
+    * duration, measured by the caller on a monotonic clock
+    * (`System.nanoTime`), because the logical times of one run are equal.
+    */
   def complete(log: IngestionLog, fetched: Long, loaded: Long, failed: Long,
-               now: Timestamp): IngestionLog =
+               now: Timestamp, elapsedSeconds: Double): IngestionLog =
     log.copy(
       recordsFetched = fetched, recordsLoaded = loaded, recordsFailed = failed,
       status = if (failed == 0) "success" else "partial",
-      endTime = Some(now),
-      durationSeconds = Some((now.getTime - log.startTime.getTime) / 1000.0))
+      endTime = Some(now), durationSeconds = Some(elapsedSeconds))
 
-  def fail(log: IngestionLog, error: String, now: Timestamp): IngestionLog =
+  /** [[complete]] for a caller that did not time the run: the duration
+    * is recorded as unknown, not as zero.
+    */
+  def complete(log: IngestionLog, fetched: Long, loaded: Long, failed: Long,
+               now: Timestamp): IngestionLog =
+    complete(log, fetched, loaded, failed, now, 0.0).copy(durationSeconds = None)
+
+  /** Close a run as failed; `now` and `elapsedSeconds` as in [[complete]]. */
+  def fail(log: IngestionLog, error: String, now: Timestamp,
+           elapsedSeconds: Double): IngestionLog =
     log.copy(status = "failed", endTime = Some(now),
-      durationSeconds = Some((now.getTime - log.startTime.getTime) / 1000.0),
-      errorMessage = Some(error))
+      durationSeconds = Some(elapsedSeconds), errorMessage = Some(error))
 
   /** Append audit rows to the log table (parquet directory). */
   def append(spark: SparkSession, logs: Seq[IngestionLog], path: String): Unit = {

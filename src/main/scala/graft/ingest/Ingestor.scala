@@ -32,19 +32,21 @@ trait Ingestor {
 
   /** Template method: fetch → validate (gate) → sanitize → load.
     * `load` returns the loaded row count; `now` is injected for
-    * deterministic audit rows.
+    * deterministic audit stamps, and the audit row's duration is timed.
     */
   final def run(spark: SparkSession, load: DataFrame => Long,
                 now: Timestamp): Audit.IngestionLog = {
+    val t0 = System.nanoTime()
+    def elapsedSeconds = (System.nanoTime() - t0) / 1e9
     val log = Audit.start(runId = s"$name@$now", name, name, now)
     try {
       val raw = fetch(spark)
       val fetched = raw.count()
       Quality.gate(validate(raw))
       val loaded = load(sanitize(raw))
-      Audit.complete(log, fetched, loaded, fetched - loaded, now)
+      Audit.complete(log, fetched, loaded, fetched - loaded, now, elapsedSeconds)
     } catch {
-      case e: Throwable => Audit.fail(log, e.getMessage, now)
+      case e: Throwable => Audit.fail(log, e.getMessage, now, elapsedSeconds)
     }
   }
 }

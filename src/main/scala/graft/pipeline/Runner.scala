@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import java.util.concurrent.{ExecutionException, Executors, FutureTask}
 
 import graft.bronze.Bronze
 import graft.silver.Silver
@@ -19,6 +20,14 @@ import graft.audit.Audit
   * parquet layers. The quality gate between silver and gold throws —
   * matching the DAG's hard failure (dag :163-179). "now" is injected
   * for determinism (SURVEY §7.4).
+  *
+  * Stages run one after another, but inside a stage each table's work
+  * (bronze append, silver re-derive + upsert, quality suite, gold mart
+  * upsert) runs on its own thread: a day's tables are small, so a stage
+  * is bound by per-job planning and scheduling, which the tables now
+  * overlap instead of paying in turn. A stage returns only after every
+  * table has finished, also when one of them failed, and then rethrows
+  * the first failure in table order.
   */
 object Runner {
 
@@ -45,6 +54,45 @@ object Runner {
       new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
   }
 
+  /** Rows that `write` writes from `df`, counted by an `Observation`
+    * DURING the write: one pass over the data, not a write plus a
+    * re-read (a schema-inference job and a count job). `name` must be
+    * unique among the writes that run concurrently.
+    */
+  private def countWritten(df: DataFrame, name: String)(write: DataFrame => Unit): Long = {
+    val obs = org.apache.spark.sql.Observation(name)
+    write(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  private val MaxConcurrentTables = 4
+
+  /** Runs `work` for every item on a fixed pool made for this call and
+    * returns the results in input order. It waits for every item before
+    * it rethrows the first failure in input order, unwrapped, so callers
+    * see the same exception as a sequential loop would throw.
+    *
+    * The pool is per call, not shared: its threads start from the
+    * calling thread and inherit its Spark local properties (job group,
+    * scheduler pool) as they are now. `FutureTask` captures any
+    * `Throwable`, so a fatal error in one table still completes its
+    * task and cannot leave the wait hanging.
+    */
+  private def forEachTable[A, B](items: Seq[A])(work: A => B): Seq[B] =
+    if (items.isEmpty) Nil
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(items.size, MaxConcurrentTables),
+        (r: Runnable) => new Thread(r, "pipeline-table"))
+      try {
+        val tasks = items.map(a => new FutureTask[B](() => work(a)))
+        tasks.foreach(pool.execute)
+        val outcomes = tasks.map { t =>
+          try Right(t.get()) catch { case e: ExecutionException => Left(e.getCause) }
+        }
+        outcomes.map(_.fold(e => throw e, identity))
+      } finally pool.shutdownNow()
+    }
+
   private def exists(spark: SparkSession, path: String): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
@@ -56,19 +104,14 @@ object Runner {
     */
   def stageBronze(spark: SparkSession, staged: Map[String, DataFrame],
                   layout: Layout, source: String, now: Timestamp): Map[String, Long] =
-    staged.map { case (table, df) =>
+    forEachTable(staged.toSeq) { case (table, df) =>
       val stamped = Bronze.withIngestMeta(df, source, table, s"${table}_raw", lit(now))
         // date-partitioned raw layer: retention/backfill become partition
         // drops, and day-grain reads prune at the scan
         .withColumn("_ingestion_date", to_date(lit(now)))
-      // Observation collects the row count DURING the write — one pass
-      // over the batch, not a write plus a second full evaluation.
-      val obs = org.apache.spark.sql.Observation(s"bronze_$table")
-      Bronze.writeLayer(stamped.observe(obs, count(lit(1)).as("n")),
-        s"${layout.bronze}/${table}_raw", "append",
-        partitionCols = Seq("_ingestion_date"))
-      table -> obs.get("n").asInstanceOf[Long]
-    }
+      table -> countWritten(stamped, s"bronze_$table")(Bronze.writeLayer(_,
+        s"${layout.bronze}/${table}_raw", "append", partitionCols = Seq("_ingestion_date")))
+    }.toMap
 
   /** Stage 2 — silver: transform each bronze entity and upsert by its
     * PK (reference run_pipeline.py:200-267 + transform_silver.py).
@@ -79,20 +122,18 @@ object Runner {
       "carts" -> (Silver.carts _, "cart_id"),
       "users" -> (Silver.users _, "email"),
       "orders" -> (Silver.orders _, "order_id"))
-    transforms.flatMap { case (table, (fn, pk)) =>
-      val bronzePath = s"${layout.bronze}/${table}_raw"
-      if (!exists(spark, bronzePath)) None
-      else {
-        val fresh = fn(Bronze.readLayer(spark, bronzePath))
-        val silverPath = s"${layout.silver}/$table"
-        val merged =
-          if (exists(spark, silverPath))
-            Upsert.merge(spark.read.parquet(silverPath), fresh, Seq(pk))
-          else fresh
-        overwriteSwapped(merged, silverPath)
-        Some(table -> spark.read.parquet(silverPath).count())
-      }
+    val present = transforms.toSeq.filter { case (table, _) =>
+      exists(spark, s"${layout.bronze}/${table}_raw")
     }
+    forEachTable(present) { case (table, (fn, pk)) =>
+      val fresh = fn(Bronze.readLayer(spark, s"${layout.bronze}/${table}_raw"))
+      val silverPath = s"${layout.silver}/$table"
+      val merged =
+        if (exists(spark, silverPath))
+          Upsert.merge(spark.read.parquet(silverPath), fresh, Seq(pk))
+        else fresh
+      table -> countWritten(merged, s"silver_$table")(overwriteSwapped(_, silverPath))
+    }.toMap
   }
 
   /** Stage 3 — quality gate over silver PKs (reference
@@ -101,11 +142,12 @@ object Runner {
   def stageQuality(spark: SparkSession, layout: Layout): Seq[Quality.CheckResult] = {
     val pkMap = Map("products" -> Seq("product_id"), "carts" -> Seq("cart_id"),
       "users" -> Seq("email"), "orders" -> Seq("order_id"))
-    val present = pkMap.flatMap { case (table, pks) =>
-      val p = s"${layout.silver}/$table"
-      if (exists(spark, p)) Some(table -> ((spark.read.parquet(p), pks))) else None
+    val present = pkMap.toSeq.filter { case (table, _) =>
+      exists(spark, s"${layout.silver}/$table")
     }
-    val results = Quality.suite(present)
+    val results = forEachTable(present) { case (table, pks) =>
+      Quality.suite(Map(table -> ((spark.read.parquet(s"${layout.silver}/$table"), pks))))
+    }.flatten
     Quality.gate(results)
     results
   }
@@ -131,16 +173,15 @@ object Runner {
             spark.read.parquet(s"${layout.silver}/products"),
             "last_updated", "user_id"))
         else Map.empty)
-      marts.map { case (name, daily) =>
+      forEachTable(marts.toSeq) { case (name, daily) =>
         val martPath = s"${layout.gold}/$name"
         val merged =
           if (exists(spark, martPath))
             Upsert.upsertStamped(spark.read.parquet(martPath), daily, lit(now),
               Seq("event_date"))
           else Upsert.stampNew(daily, lit(now))
-        overwriteSwapped(merged, martPath)
-        name -> spark.read.parquet(martPath).count()
-      }
+        name -> countWritten(merged, s"gold_$name")(overwriteSwapped(_, martPath))
+      }.toMap
     }
   }
 
@@ -174,11 +215,9 @@ object Runner {
         .groupBy(_._1)
         .map { case (table, frames) => table -> frames.map(_._2).reduce(_ unionByName _) }
       perTable.foreach { case (table, df) =>
-        val obs = org.apache.spark.sql.Observation(s"backfill_${table}_$bi")
-        graft.maintenance.Retention.overwritePartitions(
-          df.observe(obs, count(lit(1)).as("n")),
-          s"${layout.bronze}/${table}_raw", "_ingestion_date")
-        counts(table) += obs.get("n").asInstanceOf[Long]
+        counts(table) += countWritten(df, s"backfill_${table}_$bi")(
+          graft.maintenance.Retention.overwritePartitions(_,
+            s"${layout.bronze}/${table}_raw", "_ingestion_date"))
       }
     }
     counts.toMap
@@ -203,11 +242,9 @@ object Runner {
       val slice = Bronze.readLayer(spark, livePath)
         .filter(col("_ingestion_date") < lit(cutoff.toString).cast("date"))
         .withColumn("_archived_at", lit(now))
-      val obs = org.apache.spark.sql.Observation(
-        s"archive_${table}_${System.identityHashCode(slice)}")
-      graft.maintenance.Retention.overwritePartitions(
-        slice.observe(obs, count(lit(1)).as("n")), archivePath, "_ingestion_date")
-      val archived = obs.get("n").asInstanceOf[Long]
+      val archived = countWritten(slice,
+        s"archive_${table}_${System.identityHashCode(slice)}")(
+        graft.maintenance.Retention.overwritePartitions(_, archivePath, "_ingestion_date"))
       graft.maintenance.Retention.dropPartitionsBefore(
         spark, livePath, "_ingestion_date", cutoff)
       archived
@@ -218,6 +255,8 @@ object Runner {
   def runFull(spark: SparkSession, staged: Map[String, DataFrame],
               layout: Layout, source: String, runId: String,
               now: Timestamp): RunReport = {
+    val t0 = System.nanoTime()
+    def elapsedSeconds = (System.nanoTime() - t0) / 1e9
     val log = Audit.start(runId, source, "pipeline", now)
     try {
       val bronze = stageBronze(spark, staged, layout, source, now)
@@ -226,12 +265,12 @@ object Runner {
       val gold = stageGold(spark, layout, now)
       val fetched = bronze.values.sum
       Audit.append(spark,
-        Seq(Audit.complete(log, fetched, fetched, 0L, now)), layout.audit)
+        Seq(Audit.complete(log, fetched, fetched, 0L, now, elapsedSeconds)), layout.audit)
       RunReport(runId, bronze, silver, quality, gold)
     } catch {
       case e: Throwable =>
         Audit.append(spark,
-          Seq(Audit.fail(log, e.getMessage, now)), layout.audit)
+          Seq(Audit.fail(log, e.getMessage, now, elapsedSeconds)), layout.audit)
         throw e
     }
   }

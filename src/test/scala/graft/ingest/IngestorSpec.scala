@@ -35,6 +35,7 @@ class IngestorSpec extends AnyFunSuite {
     assert(loaded == 1)
     assert(log.status == "partial") // 2 fetched, 1 loaded, 1 failed
     assert(log.recordsFetched == 2 && log.recordsLoaded == 1 && log.recordsFailed == 1)
+    assert(log.endTime.contains(now) && log.durationSeconds.exists(_ > 0))
   }
 
   test("validation failure gates the load and audits a failed run") {
@@ -44,5 +45,6 @@ class IngestorSpec extends AnyFunSuite {
     assert(!loadCalled)
     assert(log.status == "failed")
     assert(log.errorMessage.exists(_.contains("quality gate failed")))
+    assert(log.durationSeconds.exists(_ > 0))
   }
 }

@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, raise_error, udf, when}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import graft.TestSpark
 import graft.audit.Audit
 
@@ -68,6 +70,9 @@ class RunnerSpec extends AnyFunSuite {
 
     val audit = Audit.read(spark, lay.audit).collect()
     assert(audit.length == 3 && audit.forall(_.status == "success"))
+    // durations are timed, not the difference of the equal logical stamps
+    assert(audit.forall(_.durationSeconds.exists(_ > 0)))
+    assert(audit.forall(a => a.endTime.contains(a.startTime)))
   }
 
   test("backfillBronze re-ingests day batches idempotently via partition overwrite") {
@@ -136,14 +141,83 @@ class RunnerSpec extends AnyFunSuite {
     // collapse under the email-keyed dedup) and trips the PK null check
     val withNull = staged("v1") + ("users" -> Seq(
       (Some(100), None: Option[String], "Ada", "L"))
-      .toDF("id", "email", "firstname", "lastname"))
+      .toDF("id", "email", "firstname", "lastname")) + ("products" -> Seq(
+      (None: Option[Int], "Widget", 9.99, "tools"))
+      .toDF("id", "title", "price", "category"))
     val ex = intercept[IllegalStateException] {
       Runner.runFull(spark, withNull, lay, "test_api", "runX",
         ts("2024-01-01 12:00:00"))
     }
-    assert(ex.getMessage.contains("quality gate failed"))
+    // failed checks are listed in table order, whichever table finished first
+    assert(ex.getMessage ==
+      "quality gate failed: products.null_product_id=1, users.null_email=1")
     assert(!new java.io.File(s"${lay.gold}/finance_mart").exists())
     val audit = Audit.read(spark, lay.audit).collect()
     assert(audit.length == 1 && audit.head.status == "failed")
+    assert(audit.head.durationSeconds.exists(_ > 0))
+  }
+
+  test("a failing table fails the stage only after its sibling tables finish") {
+    val lay = layout()
+    // cart 11's total raises when the bronze append evaluates it, while
+    // the orders append is still running: the stage must wait for it
+    val slow = udf { (x: Double) => Thread.sleep(2000); x }
+    val failing = staged("v1") + ("carts" -> staged("v1")("carts").withColumn("total",
+      when(col("id") === 11, raise_error(lit("injected cart failure")))
+        .otherwise(col("total")))) + ("orders" -> staged("v1")("orders")
+      .withColumn("total_amount", slow(col("total_amount"))))
+    val ex = intercept[Exception] {
+      Runner.runFull(spark, failing, lay, "test_api", "runF", ts("2024-01-01 12:00:00"))
+    }
+    assert(!ex.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(ex.isInstanceOf[org.apache.spark.SparkThrowable])
+    assert(ex.getMessage.contains("injected cart failure"))
+
+    val audit = Audit.read(spark, lay.audit).collect()
+    assert(audit.length == 1 && audit.head.status == "failed")
+    assert(audit.head.errorMessage.exists(_.contains("injected cart failure")))
+    Seq("products" -> 2, "users" -> 2, "orders" -> 1).foreach { case (table, n) =>
+      assert(spark.read.parquet(s"${lay.bronze}/${table}_raw").count() == n, table)
+    }
+    assert(!new java.io.File(lay.silver).exists()) // no stage after the failed one ran
+
+    val tableThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == "pipeline-table")
+    tableThreads.foreach(_.join(10000))
+    assert(tableThreads.forall(!_.isAlive))
+  }
+
+  test("layers and reports do not depend on how the tables were scheduled") {
+    // in-batch duplicate keys share the batch's ingestion timestamp, and
+    // day 3 re-sends day 2's keys at day 2's timestamp: every winner is
+    // decided by a tie-break, never by arrival order
+    def day(k: Int) = Map(
+      "products" -> Seq((1, s"Widget $k", 9.99, "tools"), (1, s"Widget $k b", 8.5, "tools"),
+        (2, s"Gadget $k", 0.0, "toys")).toDF("id", "title", "price", "category"),
+      "carts" -> Seq((10, 100, 200.0 + k, 150.0), (10, 100, 210.0, 150.0 + k),
+        (11, 101, 80.0, 80.0), (12 + k, 100, 40.0, 20.0))
+        .toDF("id", "userId", "total", "discountedTotal"),
+      "users" -> Seq((100, "a@x.com", s"Ada$k", "L"), (102, " A@X.com", "Ada", s"L$k"),
+        (101, "b@y.org", "Bob", "M")).toDF("id", "email", "firstname", "lastname"),
+      "orders" -> Seq((1000, 100, 200.0, Some(180.0)), (1000, 100, 200.0 + k, None),
+        (1001 + k, 101, 50.0, Some(45.0))).toDF("id", "userId", "total_amount", "final_amount"))
+    val nows = Seq(ts("2024-01-01 12:00:00"), ts("2024-01-02 12:00:00"),
+      ts("2024-01-02 12:00:00"))
+
+    def run(lay: Runner.Layout) = nows.zipWithIndex.map { case (now, i) =>
+      Runner.runFull(spark, day(i + 1), lay, "test_api", s"run${i + 1}", now)
+    }
+    def contents(root: String, tables: Seq[String]) = tables.map { t =>
+      t -> spark.read.parquet(s"$root/$t").collect().map(_.toString).sorted.toSeq
+    }.toMap
+    val (a, b) = (layout(), layout())
+    val (ra, rb) = (run(a), run(b))
+    assert(ra == rb)
+    val silver = Seq("products", "carts", "users", "orders")
+    val gold = Seq("finance_mart", "operations_mart", "sales_mart")
+    assert(contents(a.silver, silver) == contents(b.silver, silver))
+    assert(contents(a.gold, gold) == contents(b.gold, gold))
+    assert(ra.last.silverCounts == Map("products" -> 2, "carts" -> 5, "users" -> 2,
+      "orders" -> 4))
   }
 }
