@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * Usage: `runMain graft.AbBench <queryA> <queryB> [rounds=5]`
   * where each name is either a registered [[SparkEntry.queries]] entry
   * or one of [[AbBench.variants]] — superseded plan shapes preserved
-  * here verbatim (bench-only, never registered) so the change-attributed
-  * claims in COVERAGE.md reproduce with one command:
+  * here verbatim (bench-only, never registered) so the A/B rows in
+  * BASELINE.md reproduce with one command:
   *
   *   runMain graft.AbBench v49_neardup_xxh64 v49_cap_countjoin
   *   runMain graft.AbBench q124_pq_codes      v124_pq_hof
@@ -100,10 +100,6 @@ object AbBench {
         col("col").as("code"))
   }
 
-  /** Superseded baseline shapes, addressable by name next to the live
-    * registry entries. Bench-only: never part of [[SparkEntry.queries]],
-    * never oracled, kept solely so COVERAGE.md's A/B claims replay.
-    */
   /** q145's PageRank as first committed (6df2104): the edge table
     * cached on distinct's (src, dst) partitioning, so every iteration's
     * src-key join re-exchanges the whole |E|-sized edge list. The
@@ -202,279 +198,11 @@ object AbBench {
       .localCheckpoint(true)
   }
 
-  /** q176's normalization before the global-window rewrite: a separate
-    * total aggregate cross-joined back — TWO references to the score
-    * vector per half-round, fanning the lazily-chained rounds out.
+  /** Superseded baseline shapes, addressable by name next to the live
+    * registry entries. Bench-only: never part of [[SparkEntry.queries]],
+    * never oracled, kept solely so the A/B rows in BASELINE.md replay.
     */
-  private def hitsAggCrossjoin(edges: DataFrame, iters: Int): DataFrame = {
-    val e = edges.select(col("c"), col("p")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def normalized(scores: DataFrame, idName: String): DataFrame = {
-      val tot = scores.agg(graft.Exprs.dsum(col("s")).as("__t"))
-      scores.crossJoin(broadcast(tot))
-        .select(col(idName),
-          round(col("s") * lit(1000000.0) / col("__t"), 6).as("s"))
-    }
-    var hubs = e.select(col("c")).distinct().withColumn("s", lit(1.0))
-    var auths: DataFrame = null
-    for (_ <- 1 to iters) {
-      auths = normalized(e.join(hubs, Seq("c"))
-        .groupBy(col("p")).agg(graft.Exprs.dsum(col("s")).as("s")), "p")
-      hubs = normalized(e.join(auths, Seq("p"))
-        .groupBy(col("c")).agg(graft.Exprs.dsum(col("s")).as("s")), "c")
-    }
-    val out = hubs.select(lit("hub").as("kind"), col("c").as("id"),
-        col("s").as("score"))
-      .unionByName(auths.select(lit("authority").as("kind"),
-        col("p").as("id"), col("s").as("score")))
-      .localCheckpoint(true)
-    e.unpersist()
-    out
-  }
-
-  /** q176's edge build, shared by the HITS variants. */
-  private def hitsEdges(s: SparkSession, d: String): DataFrame =
-    Tables.t(s, d, "orders")
-      .join(Tables.t(s, d, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-
-  /** Run [[graft.operators.Hits.hitsOn]] with a FORCED strategy at any
-    * depth (the production `hits` picks by `DeepIters`) — the A/B for
-    * the deep-iteration rule: window-totals (lazy chain, single-
-    * partition funnel) vs agg+crossJoin totals with a checkpoint per
-    * half-round.
-    */
-  private def hitsForced(e0: DataFrame, iters: Int, deep: Boolean)
-      : DataFrame = {
-    val e = e0.distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = graft.operators.Hits.hitsOn(e, iters, deep)
-      .localCheckpoint(true)
-    e.unpersist()
-    out
-  }
-
-  /** q174's pre-r11 body: sorted-neighborhood positions from a global
-    * single-partition row_number (superseded by the keyed distributed
-    * rank in Linkage.sortedNeighborhoodPairs).
-    */
-  private def sortedNeighborhoodWindow(left: DataFrame, right: DataFrame,
-                                       lCol: String, rCol: String,
-                                       windowSize: Int, minJw: Double)
-      : DataFrame = {
-    val uni = left.select(col(lCol).as("value"), lit("L").as("src"))
-      .unionByName(right.select(col(rCol).as("value"), lit("R").as("src")))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("value").asc, col("src").asc)))
-    val offs = uni.select(col("value").as("v1"), col("src").as("s1"),
-        col("__rn"),
-        explode(sequence(lit(1), lit(windowSize - 1))).as("__o"))
-      .select(col("v1"), col("s1"), (col("__rn") + col("__o")).as("__rn2"))
-    offs.join(uni.select(col("value").as("v2"), col("src").as("s2"),
-        col("__rn").as("__rn2")), Seq("__rn2"))
-      .filter(col("s1") =!= col("s2"))
-      .select(
-        when(col("s1") === "L", col("v1")).otherwise(col("v2")).as("query"),
-        when(col("s1") === "L", col("v2")).otherwise(col("v1")).as("matched"))
-      .withColumn("jw",
-        round(graft.functions.JaroWinkler.of(col("query"), col("matched")), 9))
-      .filter(col("jw") >= lit(minJw))
-      .distinct()
-  }
-
   val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // q231's pair table WITHOUT the deliberate re-exchange on `b`
-    // (comp stays hashed on (a, b) out of its groupBy, so every MM
-    // round's strength join on b re-exchanges |E| instead of |items|):
-    //   AbBench q231_bradley_terry v231_bt_unpartitioned
-    "v231_bt_unpartitioned" -> ((s, d) => {
-      val li = Tables.t(s, d, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_quantity")
-      val a = li.select(col("l_orderkey").as("k"),
-        col("l_partkey").as("wp"), col("l_quantity").as("wq"))
-      val b = li.select(col("l_orderkey").as("k"),
-        col("l_partkey").as("lp"), col("l_quantity").as("lq"))
-      val comps = a.join(b, Seq("k"))
-        .filter(col("wp") =!= col("lp") && col("wq") > col("lq"))
-        .select(col("wp").as("winner"), col("lp").as("loser"))
-      graft.operators.BradleyTerry.fit(comps, "winner", "loser",
-        iters = 3, prePartitionPairs = false)
-    }),
-    // The r10 global-window formulations of the three sites rewired
-    // onto operators/Ranks in r11 — preserved so the rewiring's local
-    // cost/benefit stays one interleaved command away:
-    //   AbBench q155_dsir_selection v155_window_topk
-    //   AbBench q164_surprisal_decile_filter v164_window_decile
-    //   AbBench q174_sorted_neighborhood v174_window_positions
-    "v155_window_topk" -> ((s, d) => {
-      val (scored, tfOpt) = graft.text.Vocab.dsirScoredTable(
-        Tables.t(s, d, "documents"), "doc_id", "text",
-        col("lang") === "en", buckets = 1021, persistInput = true)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("dsir_score").desc, col("doc_id").asc)
-      val res = scored.withColumn("selected",
-          (row_number().over(w) <= 100).cast("boolean"))
-        .localCheckpoint(true)
-      tfOpt.foreach(_.unpersist())
-      res
-    }),
-    "v164_window_decile" -> ((s, d) => {
-      val per = graft.text.Vocab.unigramSurprisal(
-          Tables.t(s, d, "documents"), "doc_id", "text")
-        .withColumn("mean_surprisal",
-          col("total_surprisal") / col("n_tokens"))
-      val all = org.apache.spark.sql.expressions.Window.partitionBy()
-      val ranked = per.withColumn("__n", count(lit(1)).over(all))
-        .withColumn("decile", lit(1L) +
-          expr("10L * (row_number() over (order by mean_surprisal asc, " +
-            "doc_id asc) - 1) div __n"))
-      ranked.select(col("doc_id"), col("n_tokens"), col("total_surprisal"),
-        col("mean_surprisal"), col("decile"),
-        (col("decile") <= lit(9L)).as("keep"))
-    }),
-    // The single-task shapes the r12 rank adds replace — one command
-    // reproduces each claim:
-    //   AbBench q208_ntile v208_window_ntile
-    //   AbBench q217_grouped_quantiles v217_window_quantiles
-    "v208_window_ntile" -> ((s, d) =>
-      Tables.t(s, d, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .withColumn("tile", ntile(16).over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("l_extendedprice").asc, col("l_orderkey").asc,
-              col("l_linenumber").asc)).cast("long"))
-        .select("l_orderkey", "l_linenumber", "tile")),
-    //   AbBench q228_auc v228_window_auc
-    "v228_window_auc" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents")
-      val model = graft.text.QualityClassifier.nbTrain(
-        docs, "text", col("lang") === "en")
-      val scored = graft.text.QualityClassifier
-        .nbScore(docs, "doc_id", "text", model)
-        .join(docs.select(col("doc_id"), (col("lang") === "en").as("y")),
-          Seq("doc_id"))
-      // the banned shape: tie-corrected midranks from a GLOBAL rank
-      // window (one task sorts every row) + a same-score count window
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("score"))
-      val ws = org.apache.spark.sql.expressions.Window.partitionBy(col("score"))
-      scored
-        .withColumn("tm", lit(2L) * rank().over(w) + count(lit(1)).over(ws) - 1L)
-        .agg(
-          sum(when(col("y"), col("tm")).otherwise(0L)).as("u2"),
-          sum(when(col("y"), 1L).otherwise(0L)).as("p"),
-          sum(when(!col("y"), 1L).otherwise(0L)).as("nn"))
-        .select(col("p").as("n_pos"), col("nn").as("n_neg"),
-          ((col("u2") - col("p") * (col("p") + 1)).cast("double") /
-            (lit(2L) * col("p") * col("nn")).cast("double")).as("auc"))
-    }),
-    "v217_window_quantiles" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"))
-        .orderBy(col("value").asc, col("event_id").asc)
-      val r = Tables.t(s, d, "events")
-        .select(col("event_type"), col("event_id"), col("value"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("event_type"))))
-      val probs = s.createDataFrame(Seq(0.5, 0.95, 0.99).map(Tuple1(_)))
-        .toDF("prob")
-        .withColumn("__pd", col("prob").cast("decimal(20,10)"))
-      r.crossJoin(broadcast(probs))
-        .filter(col("rn") === ceil(col("__pd") * col("n")).cast("long"))
-        .select(col("event_type"), col("prob"), col("value"))
-    }),
-    "v174_window_positions" -> ((s, d) => {
-      val words = Tables.t(s, d, "documents")
-        .select(explode(graft.text.TextOps.tokens(col("text"))).as("w"))
-        .distinct()
-      val dirty = words.filter(length(col("w")) >= 3)
-        .select(concat(substring(col("w"), 1, 1), expr("substring(w, 3)"))
-          .as("q")).distinct()
-      sortedNeighborhoodWindow(dirty, words, "q", "w", 4, 0.6)
-    }),
-    // The XXH64 production-hash family, demoted from the registry in
-    // r11 (they were the last rows-only CORRECTNESS entries; every
-    // family has a green portable-hash twin — q136, q142, q183/q184,
-    // q189/q190 — and the XXH64 expressions keep their own
-    // codegen==interpreted + brute-force units). Preserved here
-    // verbatim so the production shapes stay one command away from a
-    // measurement: runMain graft.AbBench v49_neardup_xxh64 q183_...
-    "v48_minhash_xxh64" -> ((s, d) =>
-      graft.dedup.NearDup.minhashSignatures(
-          Tables.t(s, d, "documents"), "doc_id", "text")
-        .select(col("doc_id"),
-          element_at(col("sig"), 1).as("m0"),
-          element_at(col("sig"), 2).as("m1"),
-          element_at(col("sig"), 3).as("m2"),
-          element_at(col("sig"), 4).as("m3"))),
-    "v49_neardup_xxh64" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents").select("doc_id", "text")
-      val mutated = docs.select((col("doc_id") + 1000000L).as("doc_id"),
-        regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
-      graft.dedup.NearDup.nearDupPairs(docs.unionByName(mutated),
-        "doc_id", "text", threshold = 0.5, k = 64, bands = 16)
-    }),
-    "v50_simhash_xxh64" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents").select("doc_id", "text")
-      val mutated = docs.select((col("doc_id") + 1000000L).as("doc_id"),
-        regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
-      graft.dedup.NearDup.simhashPairsBlocked(
-        graft.dedup.NearDup.simhash(docs.unionByName(mutated),
-          "doc_id", "text"),
-        "doc_id", maxHamming = 7)
-    }),
-    "v51_ann_lsh_xxh64" -> ((s, d) => {
-      val emb = Tables.t(s, d, "embeddings")
-      graft.sim.Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 5, bits = 8, dim = 64, tables = 8)
-    }),
-    "v56_ann_ivf_xxh64" -> ((s, d) => {
-      val emb = Tables.t(s, d, "embeddings")
-      graft.sim.Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 5, nlist = 16, nprobe = 4)
-    }),
-    "v57_hll_distinct" -> ((s, d) =>
-      Tables.t(s, d, "events")
-        .groupBy(to_date(col("ts")).as("event_date"))
-        .agg(approx_count_distinct("user_id").as("approx_users"))),
-    "v176_agg_crossjoin" -> ((s, d) => {
-      val e = hitsEdges(s, d)
-      hitsAggCrossjoin(e, 2)
-    }),
-    "v176_deep8" -> ((s, d) =>
-      hitsForced(hitsEdges(s, d), iters = 8, deep = true)),
-    "v176_window8" -> ((s, d) =>
-      hitsForced(hitsEdges(s, d), iters = 8, deep = false)),
-    // the REGISTERED depth, both strategies forced — the r12 size-vs-
-    // depth A/B (run against a 10x edge list: the window's local win at
-    // sf0.1 is what the deep shape's distributed totals must beat as
-    // |V| grows):  AbBench v176_deep2 v176_window2
-    "v176_deep2" -> ((s, d) =>
-      hitsForced(hitsEdges(s, d), iters = 2, deep = true)),
-    "v176_window2" -> ((s, d) =>
-      hitsForced(hitsEdges(s, d), iters = 2, deep = false)),
-    // q182 before the r12 kept-checkpoint: the surprisal pipeline
-    // re-evaluates at every reference prefixFilterPairs makes to its
-    // input. A/B vs the registered query:  AbBench q182_corpus_build_v2
-    // v182_lazy_kept (run at soak sf1 where the recompute is visible)
-    "v182_lazy_kept" -> ((s, d) => {
-      val docs = Tables.t(s, d, "documents").select("doc_id", "text")
-      val kept = graft.text.CorpusClean.surprisalDecileFilter(
-          docs, "doc_id", "text", dropWorstDeciles = 1)
-        .filter(col("keep"))
-        .select("doc_id", "n_tokens")
-      val surv = docs.join(kept.select("doc_id"), Seq("doc_id"))
-      val pairs = graft.dedup.NearDup.prefixFilterPairs(surv,
-        "doc_id", "text", threshold = 0.9, shingleN = 3)
-        .select(col("id1"), col("id2"))
-      val comps = graft.operators.ConnectedComponents
-        .components(pairs, "id1", "id2")
-      graft.operators.ConnectedComponents.keepBestRepresentatives(
-        kept, "doc_id", comps, "n_tokens")
-    }),
     "v170_lazy_rounds" -> ((s, d) => {
       val edges = graft.operators.MarketBasket.associationRules(
           Tables.t(s, d, "lineitem"), "l_orderkey", "l_partkey", 2)
@@ -496,6 +224,17 @@ object AbBench {
           Seq("k"))
         .filter(col("src") =!= col("dst"))
       pageRankUnpartitioned(e, "src", "dst", 2, 0.85)
+    }),
+    // q49_near_dup_pairs as registered until r11, when this rows-only
+    // XXH64 MinHash-LSH pipeline left the registry for its oracled
+    // portable-hash twin q184: the current side of BASELINE.md's
+    // v49_cap_countjoin row
+    "v49_neardup_xxh64" -> ((s, d) => {
+      val docs = Tables.t(s, d, "documents").select("doc_id", "text")
+      val mutated = docs.select((col("doc_id") + 1000000L).as("doc_id"),
+        regexp_replace(col("text"), "^\\S+\\s", "").as("text"))
+      graft.dedup.NearDup.nearDupPairs(docs.unionByName(mutated),
+        "doc_id", "text", threshold = 0.5, k = 64, bands = 16)
     }),
     "v49_cap_countjoin" -> ((s, d) => {
       val docs = Tables.t(s, d, "documents").select("doc_id", "text")
@@ -541,7 +280,7 @@ object AbBench {
     val (nameA, nameB) = (args(0), args(1))
     val rounds = if (args.length > 2) args(2).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Cores.local
     val (fa, fb) = (resolve(nameA), resolve(nameB))
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)

@@ -90,9 +90,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle-partition override for scale sweeps: local[32] pins the
-    // default to 32, but a soak-scale run can spill per-partition —
+    val cpus = Cores.local
+    // Shuffle-partition override for scale sweeps: local[N] pins the
+    // default to N, but a soak-scale run can spill per-partition —
     // sweeping this (without changing thread count) distinguishes
     // "needs a better plan" from "needs more partitions/executors",
     // the exact question a 1000-executor deployment asks.

@@ -7,14 +7,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *
   * `stages` prints one line per completed stage (task count, summed
   * task run/CPU time, max task time) — the §7.1 stage-page evidence
-  * with the UI off. A stage whose nTasks=1 while the box has 32 cores
+  * with the UI off. A stage whose nTasks=1 while the box has many cores
   * is the under-parallel-scan signature this round hunts.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Cores.local
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")

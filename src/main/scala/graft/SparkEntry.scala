@@ -467,6 +467,27 @@ object SparkEntry {
     try go(new java.io.File(path)) catch { case _: Exception => () }
   }
 
+  /** Shuffle partitions of the registered streaming replays. Every
+    * micro-batch commits one output or state-store delta file per
+    * shuffle partition, and these replays hold little state, so at a
+    * `local[32]` session's 32 the per-batch commits, not the data, set
+    * the run time. 8 cuts them 4× (q270 7.6 s → 3.0 s, q216 6.6 s →
+    * 3.2 s at sf0.1). Results do not depend on the count;
+    * Structured Streaming pins it in the checkpoint at the first batch.
+    */
+  private[graft] val StreamShufflePartitions = 8
+
+  /** Runs `body` with the session's shuffle partitions set to
+    * [[StreamShufflePartitions]] and restores the previous value on
+    * every exit, a throw included: a leaked value would re-plan every
+    * later query in the shared session.
+    */
+  private[graft] def withStreamPartitions[A](s: SparkSession)(body: => A): A = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   private val stopwords = Seq("the", "a", "of", "and", "in", "to", "is", "it")
 
   /** Oracle fragment: per-language marker-hit scores from `documents`
@@ -2934,15 +2955,10 @@ object SparkEntry {
           java.nio.file.Paths.get(s"$feedDir/b$n.parquet"))
       }
       stage(docs.filter(col("doc_id") % 3 === 0), 1)
-      // partition sizing, the q277 rule: each micro-batch runs the
-      // prefix-filter join + pair write against the accumulated index
-      // — 32 shuffle partitions mean 32 tasks and files per batch=dir
-      // for a pair set that is tiny per batch. 8 cuts the per-batch
-      // commit cost 4×; results partition-count-independent; restore
-      // covers everything from the set on.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      // each micro-batch runs the prefix-filter join + pair write
+      // against the accumulated index: one task and file per shuffle
+      // partition per batch=dir for a pair set that is tiny per batch
+      withStreamPartitions(s) {
         val sq = graft.streaming.Streams.exactNearDupSink(
           s.readStream.schema(s.read.parquet(s"$feedDir/b1.parquet").schema)
             .parquet(feedDir),
@@ -2955,7 +2971,7 @@ object SparkEntry {
           stage(docs.filter(col("doc_id") % 3 === 2), 3)
           sq.processAllAvailable()
         } finally sq.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+      }
       val res = s.read.parquet(s"$tmp/nd/pairs")
         .select("id1", "id2", "jaccard")
         .localCheckpoint(true)
@@ -3211,16 +3227,10 @@ object SparkEntry {
       }
       stage(ev.filter(col("event_id") % 3 === 0), 1)
       import s.implicits._
-      // state-partition sizing, the q277 rule: the keyed state store
-      // commits one delta file per shuffle partition per micro-batch —
-      // at the session's 32 partitions that is ~96 filesystem commits
-      // across 3 batches for a user-count-bounded state. 8 partitions
-      // cuts the commit storm 4× (results partition-count-independent;
-      // Structured Streaming pins the count in the checkpoint at first
-      // batch). Restore covers everything from the set on.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      // the keyed state store commits one delta file per shuffle
+      // partition per micro-batch: at 32 partitions ~96 filesystem
+      // commits across 3 batches for a user-count-bounded state
+      withStreamPartitions(s) {
         val typed = s.readStream
           .schema(s.read.parquet(s"$feedDir/b1.parquet").schema)
           .parquet(feedDir)
@@ -3243,7 +3253,7 @@ object SparkEntry {
           stage(ev.filter(col("event_id") % 3 === 2), 3)
           sq.processAllAvailable()
         } finally sq.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+      }
       val res = graft.operators.Dedup.keepLatest(
           s.read.parquet(s"$tmp/updates"), Seq("user_id"), "batch")
         .select(col("user_id"), col("events"),
@@ -5443,8 +5453,8 @@ object SparkEntry {
       // (shingle build, frequency join, jaccard verify). For q165 that
       // input is a cheap parquet scan; HERE it is the whole surprisal
       // pipeline — the lineage rule says checkpoint. Interleaved A/B
-      // at soak sf1 (AbBench q182_corpus_build_v2 v182_lazy_kept,
-      // busy box): checkpoint 3/5, medians 77.2 s vs 86.8 s — a real
+      // against the uncheckpointed shape at soak sf1 (busy box):
+      // checkpoint 3/5, medians 77.2 s vs 86.8 s — a real
       // but modest win; the re-derivations mostly hit cached parquet,
       // so only the surprisal aggregates themselves were being repaid.
       val kept = graft.text.CorpusClean.surprisalDecileFilter(
@@ -6377,15 +6387,10 @@ object SparkEntry {
           java.nio.file.Paths.get(s"$feedDir/b$n.parquet"))
       }
       stage(b1, 1)
-      // partition sizing, the q277 rule: each micro-batch's fold runs
-      // a grouped aggregate and rewrites the versioned snapshot — at
-      // the session's 32 shuffle partitions that is 32 tasks + files
-      // per version for a #groups-sized table. 8 cuts the per-batch
-      // commit cost 4×; results are partition-count-independent and
-      // the restore covers everything from the set on.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      // each micro-batch's fold runs a grouped aggregate and rewrites
+      // the versioned snapshot: one task and file per shuffle partition
+      // per version for a #groups-sized table
+      withStreamPartitions(s) {
         val sq = graft.streaming.Streams.aggSink(
           s.readStream.schema(s.read.parquet(s"$feedDir/b1.parquet").schema)
             .parquet(feedDir),
@@ -6399,7 +6404,7 @@ object SparkEntry {
           stage(b2, 2); sq.processAllAvailable()
           stage(b3, 3); sq.processAllAvailable()
         } finally sq.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+      }
       val res = graft.streaming.Streams.currentSnapshot(s, s"$tmp/agg")
         .select(col("grp"),
           col("sum_value").cast("double").as("sum_value"), col("n_rows"))
@@ -6528,13 +6533,9 @@ object SparkEntry {
               java.nio.file.Paths.get(s"$relayDir/b${batch}_$i.parquet"))
           }
       stage(s1, 1)
-      // partition sizing, the q277 rule (see q192): two chained sinks,
-      // each folding #groups-sized state per micro-batch — 8 shuffle
-      // partitions cut the per-batch task/file count 4×; results are
-      // partition-count-independent; restore covers everything.
-      val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      // two chained sinks, each folding #groups-sized state per
+      // micro-batch, as in q192
+      withStreamPartitions(s) {
         val cdc = graft.streaming.Streams.cdcSink(
           s.readStream.schema(s.read.parquet(s"$snapDir/b1.parquet").schema)
             .parquet(snapDir),
@@ -6560,7 +6561,7 @@ object SparkEntry {
           cdc.stop()
           if (agg != null) agg.stop()
         }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+      }
       val res = graft.streaming.Streams.currentSnapshot(s, s"$tmp/agg")
         .select(col("g"),
           col("sum_value").cast("double").as("sum_value"), col("n_rows"))
@@ -8284,15 +8285,11 @@ object SparkEntry {
         // batch 1: even ids, plus replayed copies of every 10th id
         stage(ev.filter(col("event_id") % 2 === 0)
           .unionByName(ev.filter(col("event_id") % 10 === 0)), 1)
-        // state-partition sizing, the q277 rule: the dedup state store
-        // commits one delta file per shuffle partition per micro-batch
-        // (stage metrics: 4 stateful 32-task stages at 13-19 s summed
-        // task time vs <0.6 s CPU — pure commit latency). 8 partitions
-        // cuts the commit storm 4×; results are partition-count-
-        // independent and the restore covers everything from the set on.
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        // the dedup state store commits one delta file per shuffle
+        // partition per micro-batch (stage metrics: 4 stateful 32-task
+        // stages at 13-19 s summed task time vs <0.6 s CPU — pure
+        // commit latency)
+        withStreamPartitions(s) {
           val sq = graft.streaming.Streams.dedupSink(
             s.readStream
               .schema(s.read.parquet(feedDir).schema)
@@ -8309,7 +8306,7 @@ object SparkEntry {
               .unionByName(ev.filter(col("event_id") % 10 === 4)), 2)
             sq.processAllAvailable()
           } finally sq.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+        }
         s.read.parquet(s"$tmp/out")
           .select("event_id", "ts", "user_id", "event_type")
           .localCheckpoint(true)
@@ -8527,8 +8524,8 @@ object SparkEntry {
       // the BASE's hash-smallest vectors, codes over base ∪ batch —
       // which is exactly what frozen-codebook determinism guarantees.
       // Like q206, the once-per-rebuild BUILD rides in the timed
-      // window by oracle necessity; the delta-only cost is measured
-      // separately (tools/PqDeltaBench).
+      // window by oracle necessity; the delta-only cost, flat across
+      // the soak decade, is recorded in COVERAGE.md.
       val emb = t(s, d, "embeddings").select("vec_id", "embedding")
       val base = emb.filter(col("vec_id") % 5 =!= 0)
       val batch = emb.filter(col("vec_id") % 5 === 0)
@@ -8600,18 +8597,12 @@ object SparkEntry {
         stage(views.filter(col("view_ts") < cut), viewsDir, 1)
         stage(purch.filter(col("purchase_ts") < cut), purchDir, 1)
         // a stream-stream join runs FOUR state stores per shuffle
-        // partition, each committing delta files per micro-batch — at
-        // the session's 32 partitions that is ~640 filesystem commits
-        // across this replay's ~5 batches for a few thousand rows of
-        // state. 8 partitions cuts the commit storm 4× (results are
-        // partition-count-independent); Structured Streaming pins the
-        // count in the checkpoint at first batch, and the restore
-        // finally covers EVERYTHING from the set on — a throw during
-        // stream construction or start() must not leak 8 partitions
-        // into the session's later queries
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        // partition, each committing delta files per micro-batch: at 32
+        // partitions ~640 filesystem commits across this replay's ~5
+        // batches for a few thousand rows of state. The scope covers
+        // stream construction and start() too, so a throw there cannot
+        // leak the setting into the session's later queries
+        withStreamPartitions(s) {
           val joined = graft.streaming.Streams.streamIntervalJoin(
             s.readStream.schema(s.read.parquet(viewsDir).schema)
               .parquet(viewsDir),
@@ -8631,8 +8622,7 @@ object SparkEntry {
                 lit("2024-01-02").cast("timestamp"))), purchDir, 2)
             sq.processAllAvailable()
           } finally sq.stop()
-        } finally
-          s.conf.set("spark.sql.shuffle.partitions", prevSp)
+        }
         s.read.parquet(s"$tmp/out")
           .select("user_id", "view_id", "purchase_id", "view_ts",
             "purchase_ts")

@@ -9,7 +9,7 @@ object Verify {
     // optional extra args: run only the named queries (dev iteration;
     // the driver always passes exactly two args and gets the full dump)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Cores.local
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Par
 import graft.text.TextOps
 
 /** Near-duplicate detection at corpus scale: MinHash + LSH banding,
@@ -15,15 +16,6 @@ object NearDup {
 
   import graft.functions.MinHashSignature
 
-  /** Repartition only when the input is under-parallel (a small local
-    * input reads as one file = one partition = one thread). At scale the
-    * file splits already give parallelism and the shuffle would be a
-    * pure waste, so a well-split input passes through untouched.
-    * (Shared implementation: [[graft.operators.Par.fan]].)
-    */
-  private[graft] def ensureParallel(df: DataFrame, key: Column): DataFrame =
-    graft.operators.Par.fan(df, key)
-
   /** MinHash signatures over token `n`-gram shingles: one row per doc,
     * `sig` = array of k minima. Single projection pass per row —
     * nothing shuffles except the parallelism repartition.
@@ -36,7 +28,7 @@ object NearDup {
     // MinHashSignature expression over the TOKEN array — shingles
     // combine as rolling token hashes, never as strings; no explode, no
     // aggregation shuffle (see graft.functions.MinHashSignature).
-    ensureParallel(df, col(idCol))
+    Par.fan(df, col(idCol))
       .select(col(idCol),
         MinHashSignature.signature(TextOps.tokens(col(textCol)), k, shingleN)
           .as("sig"))
@@ -83,7 +75,7 @@ object NearDup {
     // explode shuffled token-instance-scale rows: measured 27 s at
     // sf0.1 where the XXH64 twin runs ~1 s. Same arithmetic, same
     // oracles (q183/q184 unchanged and still green).
-    ensureParallel(df, col(idCol))
+    Par.fan(df, col(idCol))
       .select(col(idCol),
         graft.functions.PortableMinHash
           .minima(TextOps.tokens(col(textCol)), k, shingleN).as("__ms"))
@@ -100,7 +92,7 @@ object NearDup {
   def minhashSignaturesPortable(df: DataFrame, idCol: String,
                                 textCol: String, k: Int = 16,
                                 shingleN: Int = 3): DataFrame =
-    ensureParallel(df, col(idCol))
+    Par.fan(df, col(idCol))
       .select(col(idCol), posexplode(
         graft.functions.PortableMinHash
           .minima(TextOps.tokens(col(textCol)), k, shingleN)))
@@ -255,7 +247,7 @@ object NearDup {
     */
   def jaccardVerify(pairs: DataFrame, df: DataFrame, idCol: String,
                     textCol: String): DataFrame = {
-    val toks = ensureParallel(df, col(idCol)).select(col(idCol),
+    val toks = Par.fan(df, col(idCol)).select(col(idCol),
       array_distinct(TextOps.tokens(col(textCol))).as("toks"))
     pairs
       .join(toks.select(col(idCol).as("id1"), col("toks").as("t1")), Seq("id1"))
@@ -279,7 +271,7 @@ object NearDup {
                         textCol: String, n: Int): DataFrame =
     if (n == 1) jaccardVerify(pairs, df, idCol, textCol)
     else gramJaccardVerifyOnGrams(pairs,
-      ensureParallel(df, col(idCol))
+      Par.fan(df, col(idCol))
         .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
         .filter(size(col("toks")) >= n)
         .select(col(idCol), array_distinct(TextOps.ngrams(col("toks"), n)).as("g")),
@@ -334,7 +326,7 @@ object NearDup {
     // the input text — is persisted for the call's duration and feeds
     // all three; the PPJoin literature's materialized prefix index,
     // applied one level down. Unpersisted before return.
-    val toks = ensureParallel(df, col(idCol))
+    val toks = Par.fan(df, col(idCol))
       .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -401,7 +393,7 @@ object NearDup {
     // tokenize once per side (the prefixFilterPairs materialization,
     // same rationale): frequency pass, prefix build and verify all
     // read the cached compact (id, toks) tables
-    def toksOf(df: DataFrame) = ensureParallel(df, col(idCol))
+    def toksOf(df: DataFrame) = Par.fan(df, col(idCol))
       .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -456,7 +448,7 @@ object NearDup {
     */
   def containmentVerify(pairs: DataFrame, df: DataFrame, idCol: String,
                         textCol: String, n: Int = 3): DataFrame = {
-    val grams = ensureParallel(df, col(idCol))
+    val grams = Par.fan(df, col(idCol))
       .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= n)
       .select(col(idCol), array_distinct(TextOps.ngrams(col("toks"), n)).as("g"))
@@ -634,7 +626,7 @@ object NearDup {
     * when the input is under-parallel (few-file local inputs).
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    ensureParallel(df, col(idCol))
+    Par.fan(df, col(idCol))
       .select(col(idCol),
         graft.functions.SimHash64.simhash(TextOps.tokens(col(textCol)))
           .as("simhash"))
@@ -647,7 +639,7 @@ object NearDup {
     */
   def simhashPortable(df: DataFrame, idCol: String, textCol: String)
       : DataFrame =
-    ensureParallel(df, col(idCol))
+    Par.fan(df, col(idCol))
       .select(col(idCol),
         graft.functions.PortableSimHash
           .simhash(TextOps.tokens(col(textCol))).as("simhash"))

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.operators.Par
 import graft.text.TextOps
 
 /** STATEFUL incremental exact near-dup (the standing-pipeline form of
@@ -76,7 +77,7 @@ object PrefixIndex {
     */
   private def shingled(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int): DataFrame =
-    NearDup.ensureParallel(df, col(idCol))
+    Par.fan(df, col(idCol))
       .select(col(idCol), TextOps.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= shingleN)
       .select(col(idCol),

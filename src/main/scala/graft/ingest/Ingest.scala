@@ -1,9 +1,10 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
+
+import graft.Concurrently
 
 /** Ingestion-side primitives (reference: ingestion/ingestion_util.py and
   * base_generator.py).
@@ -111,23 +112,20 @@ object Ingest {
   /** S3: parallel multi-source fetch with a required-vs-optional failure
     * policy (reference FakeStoreIngestor._fetch_parallel,
     * fakestore_ingestor.py:273-301: required source failure aborts,
-    * optional failures are dropped).
+    * optional failures are dropped). Waits for every source, like the
+    * reference, with no overall timeout. The policy covers non-fatal
+    * failures; a fatal error (`StackOverflowError`, say) is rethrown
+    * as itself.
     */
-  def fetchParallel[A](sources: Seq[(String, Boolean, () => A)],
-                       timeout: Duration = 5.minutes)
-                      (implicit ec: ExecutionContext): Map[String, A] = {
-    val futures = sources.map { case (name, required, op) =>
-      (name, required, Future(Try(op())))
-    }
-    futures.flatMap { case (name, required, f) =>
-      Await.result(f, timeout) match {
-        case Success(a) => Some(name -> a)
-        case Failure(e) if required =>
+  def fetchParallel[A](sources: Seq[(String, Boolean, () => A)]): Map[String, A] =
+    Concurrently.forEach(sources, "ingest-source") { case (name, required, op) =>
+      try Some(name -> op())
+      catch {
+        case NonFatal(e) if required =>
           throw new IllegalStateException(s"required source '$name' failed", e)
-        case Failure(_) => None
+        case NonFatal(_) => None
       }
-    }.toMap
-  }
+    }.flatten.toMap
 
   /** S7: sized-batch sink — the reference slices frames into chunks
     * (DatabaseWriter.write_batch, ingestion_util.py:511-548); the Spark

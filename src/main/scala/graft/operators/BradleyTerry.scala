@@ -37,9 +37,9 @@ import org.apache.spark.sql.types.DecimalType
   * the strength vector is deliberately NOT broadcast (|items| stops
   * fitting the moment the catalog does).
   *
-  * Measured caveat (interleaved A/B, `AbBench q231_bradley_terry
-  * v231_bt_unpartitioned`): at iters = 3 the pre-exchange is a WASH —
-  * sf0.1 medians 9.6 s on / 12.7 s off (3–2), soak sf1 54.7 s on /
+  * Measured caveat (interleaved A/B against `prePartitionPairs =
+  * false`, recorded in COVERAGE.md): at iters = 3 the pre-exchange is
+  * a WASH — sf0.1 medians 9.6 s on / 12.7 s off (3–2), soak sf1 54.7 s on /
   * 44.2 s off (1–2, loaded box). The saved per-round b-exchange is
   * partly repaid because a single-key `b` layout can be SKEWED where
   * the (a, b) groupBy layout is uniform (one popular item concentrates

@@ -3,13 +3,13 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
-import java.util.concurrent.{ExecutionException, Executors, FutureTask}
 
 import graft.bronze.Bronze
 import graft.silver.Silver
 import graft.gold.Gold
 import graft.operators.{Quality, Upsert}
 import graft.audit.Audit
+import graft.Concurrently
 
 /** Full-pipeline orchestration (reference scripts/run_pipeline.py:332-405
   * `run_full_pipeline`: ingestion → silver → quality gate → gold →
@@ -65,33 +65,8 @@ object Runner {
     obs.get("n").asInstanceOf[Long]
   }
 
-  private val MaxConcurrentTables = 4
-
-  /** Runs `work` for every item on a fixed pool made for this call and
-    * returns the results in input order. It waits for every item before
-    * it rethrows the first failure in input order, unwrapped, so callers
-    * see the same exception as a sequential loop would throw.
-    *
-    * The pool is per call, not shared: its threads start from the
-    * calling thread and inherit its Spark local properties (job group,
-    * scheduler pool) as they are now. `FutureTask` captures any
-    * `Throwable`, so a fatal error in one table still completes its
-    * task and cannot leave the wait hanging.
-    */
-  private def forEachTable[A, B](items: Seq[A])(work: A => B): Seq[B] =
-    if (items.isEmpty) Nil
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(items.size, MaxConcurrentTables),
-        (r: Runnable) => new Thread(r, "pipeline-table"))
-      try {
-        val tasks = items.map(a => new FutureTask[B](() => work(a)))
-        tasks.foreach(pool.execute)
-        val outcomes = tasks.map { t =>
-          try Right(t.get()) catch { case e: ExecutionException => Left(e.getCause) }
-        }
-        outcomes.map(_.fold(e => throw e, identity))
-      } finally pool.shutdownNow()
-    }
+  /** Name of the threads a stage runs its tables on. */
+  private val TableThread = "pipeline-table"
 
   private def exists(spark: SparkSession, path: String): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -104,7 +79,7 @@ object Runner {
     */
   def stageBronze(spark: SparkSession, staged: Map[String, DataFrame],
                   layout: Layout, source: String, now: Timestamp): Map[String, Long] =
-    forEachTable(staged.toSeq) { case (table, df) =>
+    Concurrently.forEach(staged.toSeq, TableThread) { case (table, df) =>
       val stamped = Bronze.withIngestMeta(df, source, table, s"${table}_raw", lit(now))
         // date-partitioned raw layer: retention/backfill become partition
         // drops, and day-grain reads prune at the scan
@@ -125,7 +100,7 @@ object Runner {
     val present = transforms.toSeq.filter { case (table, _) =>
       exists(spark, s"${layout.bronze}/${table}_raw")
     }
-    forEachTable(present) { case (table, (fn, pk)) =>
+    Concurrently.forEach(present, TableThread) { case (table, (fn, pk)) =>
       val fresh = fn(Bronze.readLayer(spark, s"${layout.bronze}/${table}_raw"))
       val silverPath = s"${layout.silver}/$table"
       val merged =
@@ -145,7 +120,7 @@ object Runner {
     val present = pkMap.toSeq.filter { case (table, _) =>
       exists(spark, s"${layout.silver}/$table")
     }
-    val results = forEachTable(present) { case (table, pks) =>
+    val results = Concurrently.forEach(present, TableThread) { case (table, pks) =>
       Quality.suite(Map(table -> ((spark.read.parquet(s"${layout.silver}/$table"), pks))))
     }.flatten
     Quality.gate(results)
@@ -173,7 +148,7 @@ object Runner {
             spark.read.parquet(s"${layout.silver}/products"),
             "last_updated", "user_id"))
         else Map.empty)
-      forEachTable(marts.toSeq) { case (name, daily) =>
+      Concurrently.forEach(marts.toSeq, TableThread) { case (name, daily) =>
         val martPath = s"${layout.gold}/$name"
         val merged =
           if (exists(spark, martPath))

@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.concurrent.ExecutionContext.Implicits.global
 import graft.TestSpark
 
 class IngestSpec extends AnyFunSuite {
@@ -58,6 +57,22 @@ class IngestSpec extends AnyFunSuite {
     assert(ok == Map("a" -> 1))
     intercept[IllegalStateException] {
       Ingest.fetchParallel(Seq(("a", true, () => sys.error("down"): Int)))
+    }
+  }
+
+  test("fetchParallel: a fatal error in a source surfaces promptly as itself") {
+    // required or optional, a StackOverflowError is not a source failure
+    // the policy may wrap or drop: it must reach the caller unchanged,
+    // without first waiting out any timeout
+    for (required <- Seq(true, false)) {
+      val t0 = System.nanoTime()
+      val e = intercept[StackOverflowError] {
+        Ingest.fetchParallel(Seq(
+          ("a", true, () => 1),
+          ("b", required, () => throw new StackOverflowError("deep"))))
+      }
+      assert(e.getMessage == "deep")
+      assert((System.nanoTime() - t0) / 1e9 < 30)
     }
   }
 

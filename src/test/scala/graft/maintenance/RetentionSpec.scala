@@ -143,8 +143,10 @@ class RetentionSpec extends AnyFunSuite {
     full.write.partitionBy("day").parquet(dir)
     // replace one day with restated values; other partitions untouched
     val restated = Seq(("2024-01-02", 99L)).toDF("day", "v")
+    val modeBefore = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     Retention.overwritePartitions(restated, dir, "day")
     Retention.overwritePartitions(restated, dir, "day") // idempotent
+    assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode") == modeBefore)
     val back = spark.read.parquet(dir)
       .select("day", "v").as[(String, Long)].collect().toSet
     assert(back == Set(("2024-01-01", 1L), ("2024-01-02", 99L), ("2024-01-03", 3L)))
